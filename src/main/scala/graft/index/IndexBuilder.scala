@@ -53,6 +53,7 @@ final case class SkipRow(firstDoc: Long, lastDoc: Long, maxTf: Int, minDl: Int)
   * never pays the position bytes. */
 final case class PostingRow(shard: Int, term: String, df: Long, bytes: Long,
                             blocks: Seq[Array[Byte]], skips: Seq[SkipRow])
+  extends PostingKey
 
 /** The FULL stored row: the scoring columns plus `posBlocks`, one
   * position stream per 128-posting block (Codec.encodePositions; empty
@@ -60,6 +61,10 @@ final case class PostingRow(shard: Int, term: String, df: Long, bytes: Long,
 final case class PostingRowPos(shard: Int, term: String, df: Long, bytes: Long,
                                blocks: Seq[Array[Byte]], skips: Seq[SkipRow],
                                posBlocks: Seq[Array[Byte]])
+  extends PostingKey
+
+/** What the query path groups posting rows by, in either projection. */
+sealed trait PostingKey { def shard: Int; def term: String }
 
 object PostingRow {
   /** The scoring-projection column list (everything but posBlocks). */
@@ -202,6 +207,20 @@ object IndexBuilder {
     new String(out)
   }
 
+  /** One Long metric of a build pass's Observation. A missing or
+    * mistyped key would otherwise read as 0 tokens and silently pick the
+    * in-memory accum postings path, so it fails loudly; only an empty
+    * pass (sum/max over no rows: null) reads as 0. */
+  private[graft] def observedLong(metrics: Map[String, Any], key: String,
+                                  segName: String): Long =
+    metrics.get(key) match {
+      case Some(null) => 0L
+      case Some(n: java.lang.Number) => n.longValue
+      case other => throw new IllegalStateException(
+        s"observation '$key' of $segName is $other, not a count — " +
+          "cannot size the postings path")
+    }
+
   /** Encode one complete (shard, term) posting run into its stored row.
     * The single compression path shared by [[buildRuns]] and
     * [[accumRuns]] — both therefore produce identical bytes for the
@@ -263,10 +282,11 @@ object IndexBuilder {
     * postings in an open-addressed (shard, term) map instead of requiring
     * a sorted stream — correct because the analyze stage emits documents
     * in ascending docId order, so each key's postings arrive ascending
-    * (guarded per key). Emits runs sorted by (term, shard); emission
-    * order is immaterial to the stored bytes anyway (the reduce side
-    * re-sorts by (term, shard) for the parquet layout), and the encode
-    * path is [[encodeRun]], shared with [[buildRuns]] — identical bytes.
+    * (guarded per key). Emits runs sorted by (term, shard): the postings
+    * write is map-only, so this emission order IS the stored term-major
+    * parquet layout the query path's row-group pruning relies on. The
+    * encode path is [[encodeRun]], shared with [[buildRuns]] — identical
+    * bytes.
     *
     * MEMORY: holds the whole partition's postings (~26 B + pos bytes per
     * posting) — the SORTED path bounds memory to one run and spills, so
@@ -507,11 +527,8 @@ object IndexBuilder {
     val anObs = org.apache.spark.sql.Observation(s"analyze-$segName")
     analyzed.observe(anObs, sum("docLen").as("tokens"), max("docLen").as("maxDl"))
       .write.format("noop").mode("overwrite").save()
-    def obsLong(k: String): Long = Option(anObs.get(k))
-      .collect { case l: java.lang.Long => l.longValue
-                 case i: java.lang.Integer => i.longValue }.getOrElse(0L)
-    val passTokens = obsLong("tokens")
-    val passMaxDl = obsLong("maxDl")
+    val passTokens = observedLong(anObs.get, "tokens", segName)
+    val passMaxDl = observedLong(anObs.get, "maxDl", segName)
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration

@@ -271,11 +271,14 @@ final case class FieldFilter(field: String, neg: Boolean,
 
   /** Compile to a SQL boolean over docmeta columns — what topKFiltered
     * and the cogrouped boolean gates evaluate. Values are validated
-    * (numeric) or quote-escaped (string), never spliced raw. */
+    * (numeric) or escaped (string: backslash first — Spark SQL string
+    * literals unescape `\x` sequences — then quotes), never spliced raw,
+    * so the SQL gate selects exactly what `matches` does. */
   def predicateSql: String = {
     val (colName, numeric) = colInfo
     def lit(v: String): String =
-      if (numeric) v.toLong.toString else "'" + v.replace("'", "''") + "'"
+      if (numeric) v.toLong.toString
+      else "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
     val base = eq match {
       case Some(v) => s"$colName = ${lit(v)}"
       case None =>
@@ -360,9 +363,11 @@ object QueryParser {
 
   /** `field:[lo TO hi]` / `field:{lo TO hi}` with optional leading `-`;
     * `*` bounds are open. Extracted BEFORE the whitespace split (the
-    * one query atom that contains spaces, like quoted spans). */
+    * one query atom that contains spaces, like quoted spans). Anchored
+    * at a token start, so `foo-id:[1 TO 2]` stays one text word instead
+    * of becoming the term `foo` plus a negated `id` range. */
   private val RangeRe =
-    """(-?)([A-Za-z_]+):([\[{])([^\s\]}]+)\s+TO\s+([^\s\]}]+)([\]}])""".r
+    """(?<!\S)(-?)([A-Za-z_]+):([\[{])([^\s\]}]+)\s+TO\s+([^\s\]}]+)([\]}])""".r
 
   private def rangeFilter(m: scala.util.matching.Regex.Match): FieldFilter = {
     val field = m.group(2).toLowerCase

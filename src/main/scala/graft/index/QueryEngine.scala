@@ -2,31 +2,40 @@ package graft.index
 
 import graft.analyze.CodeAnalyzer
 import graft.table.IcebergLite
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /**
  * Read path: BM25 top-k over the committed index — the engine-side
- * replacement for the ES `_search` ranking the reference relies on
- * (analyzed fields /root/reference/sentiment.py:782-793; dashboard reads
- * /root/reference/export.json).
+ * replacement for the ES `_search` ranking and boolean filter context
+ * stocksight relies on.
  *
- * Plan shape (scale-first):
- *   dict lookup (parquet filtered on term => row-group pruned, tiny)
- *   -> postings scan filtered to the query terms (pushed to parquet;
- *      files are sorted by (shard, term) at build time so min/max stats
- *      prune row groups)
- *   -> per document-shard block-max WAND top-k (groupByKey(shard) —
- *      shards score in parallel, the ES "query phase")
- *   -> global top-k merge: orderBy(score desc, docId asc).limit(k),
- *      planned as TakeOrderedAndProject (the ES "reduce phase")
- *   -> docmeta fetch for the k winners only (IN-filter, pushed down).
+ * Every entry point is a thin adapter over one pipeline:
+ *   resolve: parse, expand prefixes/fuzzies against the dictionary, and
+ *     look up global dfs (driver-resident dict, or a row-group-pruned
+ *     parquet lookup for huge vocabularies);
+ *   scan: the postings filtered to the query terms (term IN pushed to
+ *     parquet; postings files are TERM-major with 4 MB row groups, so
+ *     min/max stats prune row groups), plus one pushed-down docmeta scan
+ *     per field-gate predicate (the allowed sets);
+ *   split (`shardSplit`, the only place the path is chosen): when the
+ *     postings and the gate rows fit `driverPathMaxPostings`, both are
+ *     collected and each document shard runs on the driver (one job, no
+ *     shuffle); above it, `groupByKey(shard)` — or `cogroup` with the
+ *     gates — runs the shards in parallel on the executors (the ES
+ *     "query phase"). Per shard: block-max WAND (scored) or the
+ *     AND-group leapfrog (boolean);
+ *   merge: the shard winners are sorted on the driver by
+ *     (score desc, docId asc) and cut to k (the ES "reduce phase");
+ *   docmeta fetch for the k winners only (IN-filter, pushed down).
+ * Point lookups (explainScore, highlight) prune the scan to the doc's
+ * shard and make the same choice in `pointLookup`.
  *
- * A driver fast path handles small posting volumes (one job, no shuffle;
- * wins below ~0.5M postings) — the distributed per-shard path is the
+ * The driver path wins below ~0.5M postings; the distributed path is the
  * 10^12-doc route and already wins at 1M docs (measured p95 0.30s vs
- * 5.7s driver-side). Selection is automatic from the dictionary's df
- * totals.
+ * 5.7s driver-side). Selection is automatic from the dictionary's dfs.
  */
 object QueryEngine {
   /** The ONE place per-term cursors are built from posting rows (driver
@@ -92,6 +101,7 @@ object QueryEngine {
     (cur, preSets, negCur, negPh, negNear)
   }
 
+
   /** One shard's (predIdx, docId) gate rows -> per-predicate SORTED
     * docId arrays (the allowedCursor input). Static: runs inside
     * cogrouped closures. */
@@ -100,6 +110,29 @@ object QueryEngine {
       val arr = ps.map(_._2)
       java.util.Arrays.sort(arr)
       i -> arr
+    }
+
+  /** Each prepared group's leapfrog walk over one shard's posting rows —
+    * the ONE per-group gate lookup of the boolean paths. A group's field
+    * gate joins its walk as a required cursor (gates filter, never
+    * score); a predicate with no allowed doc in this shard kills the
+    * group here. Walks are built lazily, one group at a time. Static:
+    * runs inside the distributed closures. */
+  private[index] def groupWalks(groups: Seq[PreparedGroup], preds: Seq[String],
+      rs: Seq[PostingRowPos], gates: Map[Int, Array[Long]], bm: Bm25,
+      dfs: Map[String, Long]): Iterator[Iterator[ScoredDoc]] =
+    groups.iterator.flatMap { group =>
+      val gate: Option[Seq[DocCursor]] = group.metaPredicate match {
+        case None => Some(Nil)
+        case Some(p) => gates.get(preds.indexOf(p))
+          .map(arr => Seq(WandScorer.allowedCursor(arr)))
+      }
+      gate.map { req =>
+        val (cur, preSets, negCur, negPh, negNear) =
+          groupCursorSets(group, rs, bm, dfs)
+        WandScorer.conjunctive(group.terms, cur, group.phrases, preSets,
+          negCur, negPh, group.nearSpans, negNear, req)
+      }
     }
 }
 
@@ -123,12 +156,6 @@ final class QueryEngine(spark: SparkSession, val root: String,
 
   @transient private lazy val log =
     org.slf4j.LoggerFactory.getLogger(classOf[QueryEngine])
-
-  /** Overflow-safe int cast of the driver-path gate's limit (a threshold
-    * configured near Long.MaxValue must clamp, not wrap negative). */
-  private def gateLimit: Int =
-    if (driverPathMaxPostings >= Int.MaxValue) Int.MaxValue
-    else (driverPathMaxPostings + 1).toInt
 
   private val tbl = new IcebergLite(root)
   val manifest = tbl.currentManifest()
@@ -241,14 +268,14 @@ final class QueryEngine(spark: SparkSession, val root: String,
     (QueryParser.rankExpansions(all.toSeq, cap), all.size.toLong)
   }
 
+
   /** Disjunctive BM25 top-k; returns (docId, score) best-first. `word*`
     * words expand to their ranked, capped dictionary terms in place
     * (each scored like any term — the Lucene top-terms rewrite);
     * `word~n` likewise; `word^2.5` multiplies the word's contributions
     * (boost pre-multiplies the cursor idf, so WAND bounds scale with
     * the scores). */
-  def topK(query: String, k: Int): Seq[ScoredDoc] =
-    scoredTopK(query, k, None)
+  def topK(query: String, k: Int): Seq[ScoredDoc] = scored(query, k, None)
 
   /** Deep pagination (the ES search_after primitive): the top-k docs
     * STRICTLY AFTER `(afterScore, afterDocId)` in the global
@@ -260,7 +287,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
     * so the cursor is exact, never approximate. */
   def topKAfter(query: String, k: Int, afterScore: Double,
                 afterDocId: Long): Seq[ScoredDoc] =
-    scoredTopK(query, k, Some((afterScore, afterDocId)))
+    scored(query, k, None, Some((afterScore, afterDocId)))
 
   /** minimum_should_match (the ES match-query option): only docs
     * containing at least `minMatch` DISTINCT resolved query terms
@@ -270,45 +297,70 @@ final class QueryEngine(spark: SparkSession, val root: String,
     * absent from the dictionary is a clause that can never match, so
     * minMatch > the present-term count yields no hits (the ES rule). */
   def topKMin(query: String, k: Int, minMatch: Int): Seq[ScoredDoc] =
-    scoredTopK(query, k, None, minMatch)
+    scored(query, k, None, minMatch = minMatch)
 
   /** The full `query_string` SCORED surface: field and range atoms
     * (`lang:en`, `id:[100 TO 400]`, `-repo:web` — the Kibana filter-bar
-    * syntax every reference panel pairs with its query,
-    * /root/reference/export.json:40,77,82,91) compile to a docmeta gate
-    * and ride topKFiltered's cogrouped filter path; the residual scores
-    * exactly like topK (wildcards / fuzzies / boosts all apply). Scores
-    * are IDENTICAL with or without the gate (filter context — global
-    * statistics), so adding a filter never re-ranks surviving docs. */
-  def topKQS(query: String, k: Int): Seq[ScoredDoc] = {
-    val (residual, fields) = QueryParser.splitFieldFilters(query)
-    // same loud contract as the boolean parser's anchor rule: a
-    // field-only query has nothing to RANK (every gate-passing doc
-    // would score 0.0) — metadata-only selection is a SQL predicate
-    require(residual.trim.nonEmpty || fields.isEmpty,
-      s"field-only scored query '$query' has no text to rank — add a " +
-        "query term, or select on metadata with a plain SQL predicate")
-    if (fields.isEmpty) topK(residual, k)
-    else topKFiltered(residual, k, QueryParser.compileFields(fields))
-  }
+    * syntax every reference panel pairs with its query) compile to a
+    * docmeta gate and ride the scored path's cogrouped filter; the
+    * residual scores exactly like topK (wildcards / fuzzies / boosts all
+    * apply). Scores are IDENTICAL with or without the gate (filter
+    * context — global statistics), so adding a filter never re-ranks
+    * surviving docs. */
+  def topKQS(query: String, k: Int): Seq[ScoredDoc] =
+    scoredQS(query, k, None, None)
 
   /** Deep pagination over the query-string surface: field gates AND the
     * search_after cursor compose (both are WAND-evaluation gates), so
     * "the next page of filtered results" — the Kibana pattern: filter
     * bar + scroll — costs one more query with O(k) per-shard state. */
   def topKQSAfter(query: String, k: Int, afterScore: Double,
-                  afterDocId: Long): Seq[ScoredDoc] = {
+                  afterDocId: Long): Seq[ScoredDoc] =
+    scoredQS(query, k, None, Some((afterScore, afterDocId)))
+
+  /** The query-string split shared by topKQS, topKQSAfter and the
+    * match_topk operator: field atoms compile to one docmeta predicate,
+    * ANDed after an explicit `filter` when both are present. Same loud
+    * contract as the boolean parser's anchor rule: a field-only query
+    * has nothing to RANK (every gate-passing doc would score 0.0) —
+    * metadata-only selection is a SQL predicate. */
+  private[graft] def scoredQS(query: String, k: Int, filter: Option[String],
+                              after: Option[(Double, Long)]): Seq[ScoredDoc] = {
     val (residual, fields) = QueryParser.splitFieldFilters(query)
-    require(residual.trim.nonEmpty || fields.isEmpty,
-      s"field-only scored query '$query' has no text to rank")
-    if (fields.isEmpty) topKAfter(residual, k, afterScore, afterDocId)
-    else topKFiltered(residual, k, QueryParser.compileFields(fields),
-      after = Some((afterScore, afterDocId)))
+    require(fields.isEmpty || residual.trim.nonEmpty,
+      s"field-only scored query '$query' has no text to rank — add a " +
+        "query term, or select on metadata with a plain SQL predicate")
+    val fieldPred =
+      if (fields.isEmpty) None else Some(QueryParser.compileFields(fields))
+    scored(residual, k,
+      (filter ++ fieldPred).reduceOption((f, q) => s"($f) AND $q"), after)
   }
 
-  private def scoredTopK(query: String, k: Int,
-                         after: Option[(Double, Long)],
-                         minMatch: Int = 1): Seq[ScoredDoc] = {
+  /** Metadata-FILTERED scored search — the ES bool query's
+    * query + filter-context combination ("top matches in THIS language /
+    * repo / date range", the reference dashboards' primary query shape:
+    * every Kibana panel carries the time-range filter next to the query).
+    * `metaPredicate` is a SQL boolean expression over docmeta columns.
+    * Scoring statistics stay GLOBAL (the ES contract: a filter gates
+    * candidates, it never changes idf/avgdl), so a doc's score is
+    * identical with or without the filter — only the candidate set
+    * shrinks. `after` and `minMatch` compose freely with the filter: all
+    * three are WAND-evaluation gates. */
+  def topKFiltered(query: String, k: Int, metaPredicate: String,
+                   after: Option[(Double, Long)] = None,
+                   minMatch: Int = 1): Seq[ScoredDoc] =
+    scored(query, k, Some(metaPredicate), after, minMatch)
+
+  /** The ONE scored path behind every top-k entry point. The optional
+    * `filter` is one field-gate predicate: its pushed-down docmeta scan
+    * becomes a per-shard sorted allowed set that joins the WAND walk as
+    * a required cursor — candidates outside it are leapfrogged WITHOUT
+    * scoring, and the walk hops to the filter's next allowed doc, so a
+    * selective filter prunes like a rare term. The scorer applies the
+    * gate, `after` and `minMatch` together (bounds only ever err safe). */
+  private def scored(query: String, k: Int, filter: Option[String],
+                     after: Option[(Double, Long)] = None,
+                     minMatch: Int = 1): Seq[ScoredDoc] = {
     val weighted = QueryParser
       .resolveScoredW(QueryParser.parseScored(query), expandPrefix(_)._1,
         expandFuzzy(_, _)._1)
@@ -318,115 +370,98 @@ final class QueryEngine(spark: SparkSession, val root: String,
     val wMap: Map[String, Double] =
       weighted.filter(_._2 != 1.0).toMap // only boosted terms ship
     val rows = postings.where(col("term").isin(present: _*)).as[PostingRow]
-    val totalPostings = dfs.values.sum
-    val shardTop: Seq[ScoredDoc] =
-      if (totalPostings <= driverPathMaxPostings) {
-        // driver fast path: postings for these terms are small; single job
-        rows.collect().groupBy(_.shard).toSeq.flatMap { case (_, rs) =>
-          WandScorer.topK(present,
-            QueryEngine.termCursors(rs.toSeq, bm25, dfs, wMap), k,
-            after = after, minMatch = minMatch)
+    val allowed = filter.map(p =>
+      docmeta.where(expr(p)).select(col("docId")).as[Long])
+    // closures capture these locals only, never the engine
+    val (bm, gated) = (bm25, filter.isDefined)
+    merge(k, shardSplit(rows, dfs.values.sum, allowed, (d: Long) => d) {
+      (rs, arr) =>
+        if (gated && arr.isEmpty) Iterator.empty // no allowed doc here
+        else {
+          java.util.Arrays.sort(arr)
+          WandScorer.topK(present, QueryEngine.termCursors(rs, bm, dfs, wMap),
+            k, if (gated) Seq(WandScorer.allowedCursor(arr)) else Nil,
+            after, minMatch).iterator
         }
-      } else {
-        val (bm, pr, dfsB, wB, aB, mmB) =
-          (bm25, present, dfs, wMap, after, minMatch)
-        rows.groupByKey(_.shard).flatMapGroups { (_, it) =>
-          WandScorer.topK(pr,
-            QueryEngine.termCursors(it.toSeq, bm, dfsB, wB), k,
-            after = aB, minMatch = mmB)
-            .iterator
-        }.collect().toSeq
-      }
-    shardTop.sorted(ScoredDoc.betterOrdering).take(k)
+    })
   }
 
-  /** Metadata-FILTERED scored search — the ES bool query's
-    * query + filter-context combination ("top matches in THIS language /
-    * repo / date range", the reference dashboards' primary query shape:
-    * every Kibana panel carries the time-range filter next to the query,
-    * /root/reference/export.json). `metaPredicate` is a SQL boolean
-    * expression over docmeta columns. Scoring statistics stay GLOBAL
-    * (the ES contract: a filter gates candidates, it never changes
-    * idf/avgdl), so a doc's score is identical with or without the
-    * filter — only the candidate set shrinks.
-    *
-    * Scale shape: the filtered docmeta scan (predicate pushed to
-    * parquet) becomes a per-shard sorted allowed set that joins the WAND
-    * walk as a required cursor — candidates outside it are leapfrogged
-    * WITHOUT scoring, and the walk hops to the filter's next allowed
-    * doc, so a selective filter prunes like a rare term. The distributed
-    * path COGROUPS postings with the filtered docmeta by shard; the
-    * allowed set is never collected to the driver (driver fast path only
-    * when BOTH volumes are small). */
-  def topKFiltered(query: String, k: Int, metaPredicate: String,
-                   after: Option[(Double, Long)] = None,
-                   minMatch: Int = 1): Seq[ScoredDoc] = {
-    val weighted = QueryParser
-      .resolveScoredW(QueryParser.parseScored(query), expandPrefix(_)._1,
-        expandFuzzy(_, _)._1)
-    val dfs = termDfs(weighted.map(_._1))
-    val present = weighted.map(_._1).filter(dfs.contains)
-    if (present.isEmpty) return Nil
-    val wMap: Map[String, Double] = weighted.filter(_._2 != 1.0).toMap
-    val rows = postings.where(col("term").isin(present: _*)).as[PostingRow]
-    val allowed = docmeta.where(expr(metaPredicate))
-      .select(col("docId")).as[Long]
-    val totalPostings = dfs.values.sum
-    // `after` and `minMatch` compose freely with the allowed-set gate:
-    // all three are WAND-evaluation gates the scorer applies together
-    // (bounds only ever err safe) — "the next page of filtered results"
-    // costs one more query, exactly like the unfiltered search_after
-    val (bm, pr, dfsB, wB, aB, mmB) = (bm25, present, dfs, wMap, after, minMatch)
-    // one gate job instead of count-then-collect (r8): collect at most
-    // gateLimit ids — within the gate the limit never binds, so the
-    // array IS the full allowed set; over it, fall through distributed
-    val allowedArr: Option[Array[Long]] =
+  /** The reduce phase: shard winners sorted on the driver, cut to k. */
+  private def merge(k: Int, shardTop: Either[Seq[ScoredDoc], Dataset[ScoredDoc]])
+      : Seq[ScoredDoc] =
+    shardTop.fold(identity, _.collect().toSeq)
+      .sorted(ScoredDoc.betterOrdering).take(k)
+
+  /** The ONE driver-or-distributed split of every scan-based entry
+    * point. `rows` are the query's posting rows and `totalPostings` their
+    * volume by the dictionary's dfs; `gates` are the optional allowed-set
+    * rows of its field gates (`gateDoc` reads a row's docId). `perShard`
+    * runs once per document shard, on that shard's rows and gate rows:
+    *  - driver path, when the postings AND the gate rows fit
+    *    driverPathMaxPostings: collect both and run the shards on the
+    *    driver (one job each, no shuffle). The gate collect takes at most
+    *    limit + 1 rows — one job instead of count-then-collect (r8):
+    *    within the limit the array IS the full allowed set; over it, the
+    *    query falls through to the distributed path;
+    *  - distributed path: `groupByKey(shard)`, or `cogroup` with the
+    *    gates, runs the shards on the executors. Allowed sets are never
+    *    driver-collected here, and there is no cogroup without a gate.
+    * Returns the driver path's output, or the distributed path's
+    * uncollected Dataset (a match set can be corpus-sized). */
+  private def shardSplit[R <: PostingKey, G: ClassTag, O: Encoder](
+      rows: Dataset[R], totalPostings: Long, gates: Option[Dataset[G]],
+      gateDoc: G => Long)(perShard: (Seq[R], Array[G]) => Iterator[O])
+      : Either[Seq[O], Dataset[O]] = {
+    // overflow-safe limit + 1: a threshold configured near Long.MaxValue
+    // must clamp, not wrap negative
+    val gateLimit =
+      if (driverPathMaxPostings >= Int.MaxValue) Int.MaxValue
+      else (driverPathMaxPostings + 1).toInt
+    val driverGates: Option[Array[G]] =
       if (totalPostings > driverPathMaxPostings) None
-      else {
-        val a = allowed.limit(gateLimit).collect()
-        if (a.length <= driverPathMaxPostings) Some(a) else None
+      else gates.fold(Option(Array.empty[G])) { g =>
+        Some(g.limit(gateLimit).collect())
+          .filter(_.length <= driverPathMaxPostings)
       }
-    val shardTop: Seq[ScoredDoc] =
-      if (allowedArr.isDefined) {
-        val byShard = allowedArr.get.groupBy(IndexBuilder.shardOf)
-        rows.collect().groupBy(_.shard).toSeq.flatMap { case (shard, rs) =>
-          byShard.get(shard).toSeq.flatMap { arr =>
-            java.util.Arrays.sort(arr)
-            WandScorer.topK(present,
-              QueryEngine.termCursors(rs.toSeq, bm25, dfs, wMap), k,
-              Seq(WandScorer.allowedCursor(arr)), after = after,
-              minMatch = minMatch)
-          }
-        }
-      } else {
-        rows.groupByKey(_.shard)
-          .cogroup(allowed.groupByKey(IndexBuilder.shardOf)) {
-            (_, rIt, aIt) =>
-              val arr = aIt.toArray
-              if (arr.isEmpty) Iterator.empty
-              else {
-                java.util.Arrays.sort(arr)
-                WandScorer.topK(pr,
-                  QueryEngine.termCursors(rIt.toSeq, bm, dfsB, wB), k,
-                  Seq(WandScorer.allowedCursor(arr)), after = aB,
-                  minMatch = mmB).iterator
-              }
-          }.collect().toSeq
-      }
-    shardTop.sorted(ScoredDoc.betterOrdering).take(k)
+    val noGate = Array.empty[G]
+    driverGates match {
+      case Some(ga) =>
+        val byShard = ga.groupBy(g => IndexBuilder.shardOf(gateDoc(g)))
+        Left(rows.collect().groupBy(_.shard).toSeq.flatMap { case (s, rs) =>
+          perShard(rs.toSeq, byShard.getOrElse(s, noGate))
+        })
+      case None =>
+        val byShard = rows.groupByKey(_.shard)
+        Right(gates match {
+          case None =>
+            byShard.flatMapGroups((_, it) => perShard(it.toSeq, noGate))
+          case Some(g) =>
+            byShard.cogroup(g.groupByKey(x => IndexBuilder.shardOf(gateDoc(x)))) {
+              (_, rIt, gIt) => perShard(rIt.toSeq, gIt.toArray)
+            }
+        })
+    }
   }
 
-  /** topKFiltered joined with document metadata, display-ordered. */
+  /** Top-k joined with document metadata, display-ordered. */
   def searchFiltered(query: String, k: Int,
-                     metaPredicate: String): DataFrame = {
-    val hits = topKFiltered(query, k, metaPredicate)
-    if (hits.isEmpty)
+                     metaPredicate: String): DataFrame =
+    withMeta(topKFiltered(query, k, metaPredicate))
+
+  /** Top-k joined with document metadata (repo/path/commit/lang/sha256). */
+  def search(query: String, k: Int): DataFrame = withMeta(topK(query, k))
+
+  private def withMeta(hits: Seq[ScoredDoc]): DataFrame = {
+    if (hits.isEmpty) // zero hits: empty DF with the REAL output schema
       return docmeta.withColumn("score", lit(0.0)).where(lit(false))
-    val ids = hits.map(_.docId)
-    val meta = docmeta.where(col("docId").isin(ids: _*))
+    val meta = docmeta.where(col("docId").isin(hits.map(_.docId): _*)) // IN-pushdown, k rows
     meta.join(broadcast(hits.toDF("docId", "score")), Seq("docId"))
       .orderBy(desc("score"), asc("docId"))
   }
+
+  /** Top-k as a DataFrame (docId, score) — for the driver contract. */
+  def topKDF(query: String, k: Int): DataFrame =
+    topK(query, k).toDF("docId", "score")
 
   /** Read the query's posting rows as FULL rows; when no phrase needs
     * positions, the scan takes the scoring projection (posBlocks never
@@ -506,8 +541,8 @@ final class QueryEngine(spark: SparkSession, val root: String,
     * gates, as ONE unioned (predIdx, docId) dataset — each distinct
     * predicate is a pushed-down docmeta scan; the union cogroups with
     * the postings by shard, so gates ride the same distributed walk as
-    * topKFiltered's allowed set and are never driver-collected on the
-    * scale path. */
+    * the scored filter's allowed set and are never driver-collected on
+    * the scale path. */
   private def allowedSets(preds: Seq[String]): Dataset[(Int, Long)] =
     preds.zipWithIndex.map { case (p, i) =>
       docmeta.where(expr(p))
@@ -525,271 +560,81 @@ final class QueryEngine(spark: SparkSession, val root: String,
       valid.flatMap(_.negNearSpans).flatMap(_._1))
       .distinct
 
-
-  /** Boolean keyword query: "spaces are ANDs commas are ORs"
-    * (/root/reference/sentiment.py:638-641); quoted spans add positional
-    * phrase constraints; `word*` words add prefix requirements
-    * (filter-only, uncapped expansion — see prepGroups). Doc score = max
-    * over matching AND-groups of the group's summed BM25 (phrases and
-    * prefixes filter, never boost). */
-  def booleanTopK(query: String, k: Int): Seq[ScoredDoc] = {
+  /** The boolean surface's resolve -> scan -> split, shared by
+    * booleanTopK and matchingDocIds: filter-context group prep, the
+    * postings the surviving groups read (positions only when a phrase or
+    * span needs them), and their field gates as per-predicate allowed
+    * sets. `perShard` gets each surviving group's leapfrog walk over one
+    * shard (QueryEngine.groupWalks). None when no group can match. */
+  private def booleanSplit[O: Encoder](query: String)(
+      perShard: Iterator[Iterator[ScoredDoc]] => Iterator[O])
+      : Option[Either[Seq[O], Dataset[O]]] = {
     val groups = QueryParser.parseGroups(query)
-    if (groups.isEmpty) return Nil
+    if (groups.isEmpty) return None
     val (valid, dfs) = prepGroups(groups)
-    if (valid.isEmpty) return Nil
+    if (valid.isEmpty) return None
     val needPos = valid.exists(g => g.phrases.nonEmpty ||
       g.negPhrases.nonEmpty || g.nearSpans.nonEmpty ||
       g.negNearSpans.nonEmpty)
     if (needPos) requirePositions()
-    val validTerms = groupReadSet(valid)
-    val rows = postingRowsFor(validTerms, needPos)
+    val readSet = groupReadSet(valid)
     val preds = valid.flatMap(_.metaPredicate).distinct
-    val (bm, dfsB, validB, predsB) = (bm25, dfs, valid, preds)
+    // no field gates: no allowed sets, so no cogroup (the r6 plan shapes)
+    val gates = if (preds.isEmpty) None else Some(allowedSets(preds))
+    val bm = bm25
+    Some(shardSplit(postingRowsFor(readSet, needPos), readSet.map(dfs).sum,
+        gates, (g: (Int, Long)) => g._2) { (rs, gs) =>
+      perShard(QueryEngine.groupWalks(valid, preds, rs,
+        QueryEngine.sortGates(gs), bm, dfs))
+    })
+  }
 
-    // Memory-bounded EXACT scoring: each AND-group keeps only its own
-    // TopK(k) while streaming its intersection (never the full match set —
-    // two hot terms AND-ed would otherwise accumulate O(matches) entries).
-    // Exactness: a doc's final score is max over groups of the group sum;
-    // if the doc is in the global top-k, then in its best-scoring group
-    // fewer than k docs beat it (any group-mate with a higher group score
-    // has a final score at least that high), so the doc survives that
-    // group's TopK(k) and the merge sees its true max. Merge state is
-    // O(groups * k). A group's field gate joins its leapfrog as a
-    // required cursor (gates filter, never score); a predicate with no
-    // allowed docs in this shard kills the group here.
-    def scoreShard(rs: Seq[PostingRowPos], gates: Map[Int, Array[Long]],
-                   k: Int): Seq[ScoredDoc] = {
-      val perGroup: Seq[Seq[ScoredDoc]] = validB.flatMap { group =>
-        val gate: Option[Seq[DocCursor]] = group.metaPredicate match {
-          case None => Some(Nil)
-          case Some(p) => gates.get(predsB.indexOf(p))
-            .map(arr => Seq(WandScorer.allowedCursor(arr)))
+  /** Boolean keyword query: "spaces are ANDs commas are ORs" (stocksight's
+    * keyword rule); quoted spans add positional phrase constraints;
+    * `word*` words add prefix requirements (filter-only, uncapped
+    * expansion — see prepGroups). Doc score = max over matching
+    * AND-groups of the group's summed BM25 (phrases and prefixes filter,
+    * never boost).
+    *
+    * Memory-bounded EXACT scoring: each AND-group keeps only its own
+    * TopK(k) while streaming its intersection (never the full match set —
+    * two hot terms AND-ed would otherwise accumulate O(matches) entries).
+    * Exactness: a doc's final score is max over groups of the group sum;
+    * if the doc is in the global top-k, then in its best-scoring group
+    * fewer than k docs beat it (any group-mate with a higher group score
+    * has a final score at least that high), so the doc survives that
+    * group's TopK(k) and the merge sees its true max. Merge state is
+    * O(groups * k). */
+  def booleanTopK(query: String, k: Int): Seq[ScoredDoc] =
+    booleanSplit(query) { walks =>
+      val best = mutable.HashMap.empty[Long, Double]
+      walks.foreach { walk =>
+        val groupTop = new ScoredDoc.TopK(k)
+        walk.foreach(groupTop.offer)
+        groupTop.result().foreach { sd =>
+          val prev = best.get(sd.docId)
+          if (prev.isEmpty || sd.score > prev.get) best(sd.docId) = sd.score
         }
-        gate.map { req =>
-          val (cur, preSets, negCur, negPh, negNear) =
-            QueryEngine.groupCursorSets(group, rs, bm, dfsB)
-          val groupTop = new ScoredDoc.TopK(k)
-          WandScorer.conjunctive(group.terms, cur, group.phrases, preSets,
-              negCur, negPh, group.nearSpans, negNear, req)
-            .foreach(groupTop.offer)
-          groupTop.result()
-        }
-      }
-      val best = scala.collection.mutable.HashMap.empty[Long, Double]
-      perGroup.iterator.flatten.foreach { sd =>
-        val prev = best.get(sd.docId)
-        if (prev.isEmpty || sd.score > prev.get) best(sd.docId) = sd.score
       }
       val top = new ScoredDoc.TopK(k)
       best.toSeq.sortBy(_._1).foreach { case (id, s) => top.offer(ScoredDoc(id, s)) }
-      top.result()
-    }
-
-    val totalPostings = validTerms.map(dfs).sum
-    val shardTop: Seq[ScoredDoc] =
-      if (preds.isEmpty) {
-        // no field gates: the r6 plan shapes, bit-for-bit (no cogroup)
-        if (totalPostings <= driverPathMaxPostings)
-          rows.collect().groupBy(_.shard).toSeq
-            .flatMap { case (_, rs) => scoreShard(rs.toSeq, Map.empty, k) }
-        else
-          rows.groupByKey(_.shard)
-            .flatMapGroups((_, it) => scoreShard(it.toSeq, Map.empty, k).iterator)
-            .collect().toSeq
-      } else {
-        // field gates: per-predicate docmeta scans (predicate pushed)
-        // cogrouped with the postings by shard — same scale shape as
-        // topKFiltered, allowed sets never driver-collected on this path
-        val allowedAll = allowedSets(preds)
-        // one gate job instead of count-then-collect (see topKFiltered, r8)
-        val gateArr: Option[Array[(Int, Long)]] =
-          if (totalPostings > driverPathMaxPostings) None
-          else {
-            val a = allowedAll.limit(gateLimit).collect()
-            if (a.length <= driverPathMaxPostings) Some(a) else None
-          }
-        if (gateArr.isDefined) {
-          val byShard = gateArr.get
-            .groupBy(t => IndexBuilder.shardOf(t._2))
-            .map { case (s, ts) => s -> QueryEngine.sortGates(ts) }
-          rows.collect().groupBy(_.shard).toSeq.flatMap { case (shard, rs) =>
-            scoreShard(rs.toSeq, byShard.getOrElse(shard, Map.empty), k)
-          }
-        } else {
-          rows.groupByKey(_.shard)
-            .cogroup(allowedAll.groupByKey(t => IndexBuilder.shardOf(t._2))) {
-              (_, rIt, aIt) =>
-                scoreShard(rIt.toSeq, QueryEngine.sortGates(aIt.toArray), k)
-                  .iterator
-            }.collect().toSeq
-        }
-      }
-    shardTop.sorted(ScoredDoc.betterOrdering).take(k)
-  }
-
-  /** The ES `/_explain` analogue: the per-term BM25 breakdown of one
-    * document's score against a disjunctive query. Contributions are
-    * listed in QUERY TERM ORDER and sum (in that order) EXACTLY to the
-    * engine's score for the doc — the frozen float order the whole
-    * parity story rests on, now inspectable per term. Point lookup: the
-    * postings read is term-IN pruned (the same volume a driver
-    * fast-path query reads) and each cursor skip-advances straight to
-    * the docId — no scoring pass. */
-  def explainScore(query: String, docId: Long): Seq[ScoreExplain] = {
-    val terms = CodeAnalyzer.analyzeQuery(query)
-    val dfs = termDfs(terms)
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty) return Nil
-    // point lookup: prune to the docId's shard (the doc lives in exactly
-    // one; every other shard's cursors would advance to exhaustion for
-    // nothing — see highlight for the measured effect)
-    val rows = postings
-      .where(col("term").isin(present: _*) &&
-        col("shard") === IndexBuilder.shardOf(docId))
-      .as[PostingRow]
-    // same driverPathMaxPostings gate as topK/booleanTopK/matchingDocIds:
-    // a stopword-dense query over a large corpus must not pull the full
-    // posting volume to the driver for a single point lookup — the
-    // distributed path does the skip-advance per (shard, term) on the
-    // executors and collects the at-most-|terms| hits. The gate sums the
-    // PRUNED scan's own df column (a column-pruned one-column job) — the
-    // global-df average a previous revision divided by numShards
-    // under-gates a term skewed into the looked-up shard (ADVICE r6).
-    val totalPostings = rows.toDF()
-      .agg(coalesce(sum(col("df")), lit(0L))).as[Long].head()
-    val hits: Map[String, (Int, Int)] = // term -> (tf, dl) at docId
-      if (totalPostings <= driverPathMaxPostings) {
-        val collected = rows.collect()
-        present.flatMap { t =>
-          // cursors are per document shard (their block ranges are only
-          // guaranteed non-interleaved within one shard); the doc lives
-          // in exactly one, the others advance past it to exhaustion
-          collected.filter(_.term == t).groupBy(_.shard).values.flatMap { rs =>
-            val cur = QueryEngine.termCursors(rs.toSeq, bm25, dfs)(t)
-            cur.advanceTo(docId)
-            if (!cur.exhausted && cur.curDoc == docId)
-              Some(t -> (cur.curTf, cur.curDl))
-            else None
-          }
-        }.toMap
-      } else {
-        val (bm, dfsB, target) = (bm25, dfs, docId)
-        rows.groupByKey(r => (r.shard, r.term))
-          .flatMapGroups { (key: (Int, String), it: Iterator[PostingRow]) =>
-            val t = key._2
-            val cur = QueryEngine.termCursors(it.toSeq, bm, dfsB)(t)
-            cur.advanceTo(target)
-            if (!cur.exhausted && cur.curDoc == target)
-              Iterator.single((t, cur.curTf, cur.curDl))
-            else Iterator.empty
-          }.collect().map { case (t, tf, dl) => t -> (tf, dl) }.toMap
-      }
-    present.flatMap { t =>
-      hits.get(t).map { case (tf, dl) =>
-        val idf = bm25.idf(dfs(t))
-        ScoreExplain(t, dfs(t), idf, tf, dl, bm25.score(idf, tf, dl))
-      }
-    }
-  }
-
-  /** The ES highlighter analogue: per-term match POSITIONS of one
-    * document against a query — the user-facing read of the positional
-    * posBlocks column beyond phrase filtering. Wildcards expand like
-    * topK (ranked, capped); terms are returned in query/expansion order,
-    * positions ascending. Point lookup: term-IN pruned postingsFull read
-    * + per-(shard,term) skip-advance, same driver/distributed gate as
-    * explainScore — only the landing block's position bytes are ever
-    * decoded. */
-  def highlight(query: String, docId: Long): Seq[HighlightTerm] = {
-    requirePositions()
-    val terms = QueryParser
-      .resolveScored(QueryParser.parseScored(query), expandPrefix(_)._1,
-        expandFuzzy(_, _)._1)
-    val dfs = termDfs(terms)
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty) return Nil
-    // point lookup: the docId names its shard, so prune the postings
-    // read to that shard's sub-lists — at 4M docs this cut the highlight
-    // read from the full position volume of every query term (~2.7 s) to
-    // one shard's (~flat in corpus size); same per-(shard,term)
-    // skip-advance after the scan
-    val rows = postingsFull
-      .where(col("term").isin(present: _*) &&
-        col("shard") === IndexBuilder.shardOf(docId))
-      .as[PostingRowPos]
-    // exact pruned-scan volume, same rationale as explainScore's gate
-    // (df is a lite column: posBlocks stays out of this scan too)
-    val totalPostings = rows.toDF()
-      .agg(coalesce(sum(col("df")), lit(0L))).as[Long].head()
-    val hits: Map[String, Seq[Int]] =
-      if (totalPostings <= driverPathMaxPostings) {
-        val collected = rows.collect()
-        present.flatMap { t =>
-          collected.filter(_.term == t).groupBy(_.shard).values.flatMap { rs =>
-            val cur = QueryEngine.termCursorsPos(rs.toSeq, bm25, dfs)(t)
-            cur.advanceTo(docId)
-            if (!cur.exhausted && cur.curDoc == docId)
-              Some(t -> cur.curPositions.toSeq)
-            else None
-          }
-        }.toMap
-      } else {
-        val (bm, dfsB, target) = (bm25, dfs, docId)
-        rows.groupByKey(r => (r.shard, r.term))
-          .flatMapGroups { (key: (Int, String), it: Iterator[PostingRowPos]) =>
-            val t = key._2
-            val cur = QueryEngine.termCursorsPos(it.toSeq, bm, dfsB)(t)
-            cur.advanceTo(target)
-            if (!cur.exhausted && cur.curDoc == target)
-              Iterator.single((t, cur.curPositions.toSeq))
-            else Iterator.empty
-          }.collect().toMap
-      }
-    present.flatMap(t => hits.get(t).map(ps => HighlightTerm(t, ps)))
-  }
+      top.result().iterator
+    }.fold(Seq.empty[ScoredDoc])(merge(k, _))
 
   /** FILTER-context boolean retrieval: the FULL matching docId set (no
     * scores, no k-cut) as a DataFrame — the hit set of a
     * `WHERE match(...)` can be corpus-sized, so it is never collected:
     * each document shard runs the same leapfrog AND-group intersection
-    * as booleanTopK and streams the union of group hits out. The same
-    * small-postings driver fast path applies (single job, no shuffle). */
-  def matchingDocIds(query: String): DataFrame = {
-    val groups = QueryParser.parseGroups(query)
-    val empty = spark.createDataset(Seq.empty[Long]).toDF("docId")
-    if (groups.isEmpty) return empty
-    val (valid, dfs) = prepGroups(groups)
-    if (valid.isEmpty) return empty
-    val needPos = valid.exists(g => g.phrases.nonEmpty ||
-      g.negPhrases.nonEmpty || g.nearSpans.nonEmpty ||
-      g.negNearSpans.nonEmpty)
-    if (needPos) requirePositions()
-    val validTerms = groupReadSet(valid)
-    val rows = postingRowsFor(validTerms, needPos)
-    val preds = valid.flatMap(_.metaPredicate).distinct
-    val (bm, dfsB, validB, predsB) = (bm25, dfs, valid, preds)
-    // Per-group ASCENDING emission + O(groups)-state min-merge dedup:
-    // each group's leapfrog yields docIds in order, so deduping across
-    // OR-groups only needs every iterator's HEAD — executor memory is
-    // O(groups), never the O(shard-matches) hash set a dense multi-group
-    // match would accumulate (VERDICT r6 "wrong #1"). Field gates join
-    // each group's leapfrog as required cursors, exactly like
-    // booleanTopK's.
-    def shardIds(rs: Seq[PostingRowPos],
-                 gates: Map[Int, Array[Long]]): Iterator[Long] = {
-      val its: Array[BufferedIterator[Long]] = validB.flatMap { group =>
-        val gate: Option[Seq[DocCursor]] = group.metaPredicate match {
-          case None => Some(Nil)
-          case Some(p) => gates.get(predsB.indexOf(p))
-            .map(arr => Seq(WandScorer.allowedCursor(arr)))
-        }
-        gate.map { req =>
-          val (cur, preSets, negCur, negPh, negNear) =
-            QueryEngine.groupCursorSets(group, rs, bm, dfsB)
-          WandScorer.conjunctive(group.terms, cur, group.phrases, preSets,
-            negCur, negPh, group.nearSpans, negNear, req).map(_.docId).buffered
-        }
-      }.toArray
+    * as booleanTopK and streams the union of group hits out.
+    *
+    * Per-group ASCENDING emission + O(groups)-state min-merge dedup:
+    * each group's leapfrog yields docIds in order, so deduping across
+    * OR-groups only needs every iterator's HEAD — executor memory is
+    * O(groups), never the O(shard-matches) hash set a dense multi-group
+    * match would accumulate (VERDICT r6 "wrong #1"). */
+  def matchingDocIds(query: String): DataFrame =
+    booleanSplit(query) { walks =>
+      val its = walks.map(_.map(_.docId).buffered).toArray
       new Iterator[Long] {
         def hasNext: Boolean = its.exists(_.hasNext)
         def next(): Long = {
@@ -809,55 +654,88 @@ final class QueryEngine(spark: SparkSession, val root: String,
           m
         }
       }
+    } match {
+      case None => spark.createDataset(Seq.empty[Long]).toDF("docId")
+      case Some(ids) => ids.fold(_.toDF("docId"), _.toDF("docId"))
     }
-    val totalPostings = validTerms.map(dfs).sum
-    if (preds.isEmpty) {
-      if (totalPostings <= driverPathMaxPostings)
-        rows.collect().groupBy(_.shard).toSeq
-          .flatMap(g => shardIds(g._2.toSeq, Map.empty)).toDF("docId")
-      else
-        rows.groupByKey(_.shard)
-          .flatMapGroups((_, it) => shardIds(it.toSeq, Map.empty))
-          .toDF("docId")
-    } else {
-      val allowedAll = allowedSets(preds)
-      // one gate job instead of count-then-collect (see topKFiltered, r8)
-      val gateArr: Option[Array[(Int, Long)]] =
-        if (totalPostings > driverPathMaxPostings) None
-        else {
-          val a = allowedAll.limit(gateLimit).collect()
-          if (a.length <= driverPathMaxPostings) Some(a) else None
-        }
-      if (gateArr.isDefined) {
-        val byShard = gateArr.get
-          .groupBy(t => IndexBuilder.shardOf(t._2))
-          .map { case (s, ts) => s -> QueryEngine.sortGates(ts) }
-        rows.collect().groupBy(_.shard).toSeq
-          .flatMap { case (shard, rs) =>
-            shardIds(rs.toSeq, byShard.getOrElse(shard, Map.empty))
-          }.toDF("docId")
-      } else {
-        rows.groupByKey(_.shard)
-          .cogroup(allowedAll.groupByKey(t => IndexBuilder.shardOf(t._2))) {
-            (_, rIt, aIt) =>
-              shardIds(rIt.toSeq, QueryEngine.sortGates(aIt.toArray))
-          }.toDF("docId")
+
+  /** The ES `/_explain` analogue: the per-term BM25 breakdown of one
+    * document's score against a disjunctive query. Contributions are
+    * listed in QUERY TERM ORDER and sum (in that order) EXACTLY to the
+    * engine's score for the doc — the frozen float order the whole
+    * parity story rests on, now inspectable per term. */
+  def explainScore(query: String, docId: Long): Seq[ScoreExplain] = {
+    val terms = CodeAnalyzer.analyzeQuery(query)
+    val dfs = termDfs(terms)
+    val present = terms.filter(dfs.contains)
+    if (present.isEmpty) return Nil
+    val bm = bm25
+    val hits = pointLookup[PostingRow, (Int, Int)](postings, present, docId)(
+      (t, rs) => QueryEngine.termCursors(rs, bm, dfs)(t),
+      cur => (cur.curTf, cur.curDl))
+    present.flatMap { t =>
+      hits.get(t).map { case (tf, dl) =>
+        val idf = bm25.idf(dfs(t))
+        ScoreExplain(t, dfs(t), idf, tf, dl, bm25.score(idf, tf, dl))
       }
     }
   }
 
-  /** Top-k as a DataFrame (docId, score) — for the driver contract. */
-  def topKDF(query: String, k: Int): DataFrame =
-    topK(query, k).toDF("docId", "score")
+  /** The ES highlighter analogue: per-term match POSITIONS of one
+    * document against a query — the user-facing read of the positional
+    * posBlocks column beyond phrase filtering. Wildcards expand like
+    * topK (ranked, capped); terms are returned in query/expansion order,
+    * positions ascending. Only the landing block's position bytes are
+    * ever decoded. */
+  def highlight(query: String, docId: Long): Seq[HighlightTerm] = {
+    requirePositions()
+    val terms = QueryParser
+      .resolveScored(QueryParser.parseScored(query), expandPrefix(_)._1,
+        expandFuzzy(_, _)._1)
+    val dfs = termDfs(terms)
+    val present = terms.filter(dfs.contains)
+    if (present.isEmpty) return Nil
+    val bm = bm25
+    val hits = pointLookup[PostingRowPos, Seq[Int]](postingsFull, present, docId)(
+      (t, rs) => QueryEngine.termCursorsPos(rs, bm, dfs)(t),
+      _.curPositions.toSeq)
+    present.flatMap(t => hits.get(t).map(ps => HighlightTerm(t, ps)))
+  }
 
-  /** Top-k joined with document metadata (repo/path/commit/lang/sha256). */
-  def search(query: String, k: Int): DataFrame = {
-    val hits = topK(query, k)
-    if (hits.isEmpty) // zero hits: empty DF with the REAL output schema,
-      return docmeta.withColumn("score", lit(0.0)).where(lit(false))
-    val ids = hits.map(_.docId)
-    val meta = docmeta.where(col("docId").isin(ids: _*)) // IN-pushdown, k rows
-    meta.join(broadcast(hits.toDF("docId", "score")), Seq("docId"))
-      .orderBy(desc("score"), asc("docId"))
+  /** Point lookup of one document, shared by explainScore and highlight:
+    * (term -> `read` of its cursor) for every term whose postings hold
+    * the doc. The docId names its shard, so the term-IN scan is pruned to
+    * that shard's sub-lists (at 4M docs this cut highlight's read from
+    * every query term's full position volume, ~2.7 s, to one shard's);
+    * each (shard, term) cursor skip-advances straight to the doc — no
+    * scoring pass. Same driverPathMaxPostings split as the scans: a
+    * stopword-dense query over a large corpus must not pull its full
+    * posting volume to the driver for one lookup, so the distributed
+    * path advances per (shard, term) on the executors and collects the
+    * at-most-|terms| hits. The split sums the PRUNED scan's own df column
+    * (a column-pruned one-column job; df is a lite column, so posBlocks
+    * stays out of it) — the global-df average a previous revision divided
+    * by numShards under-gated a term skewed into the looked-up shard
+    * (ADVICE r6). */
+  private def pointLookup[R <: PostingKey, V](source: DataFrame,
+      terms: Seq[String], docId: Long)(cursorOf: (String, Seq[R]) => PostingCursor,
+      read: PostingCursor => V)(implicit rEnc: Encoder[R],
+      hitEnc: Encoder[(String, V)]): Map[String, V] = {
+    val rows = source.where(col("term").isin(terms: _*) &&
+      col("shard") === IndexBuilder.shardOf(docId)).as[R]
+    val hit: ((Int, String), Seq[R]) => Option[(String, V)] = { case ((_, t), rs) =>
+      val cur = cursorOf(t, rs)
+      cur.advanceTo(docId)
+      if (!cur.exhausted && cur.curDoc == docId) Some(t -> read(cur)) else None
+    }
+    val totalPostings = rows.toDF()
+      .agg(coalesce(sum(col("df")), lit(0L))).as[Long].head()
+    if (totalPostings <= driverPathMaxPostings)
+      rows.collect().groupBy(r => (r.shard, r.term)).toSeq
+        .flatMap { case (key, rs) => hit(key, rs.toSeq) }.toMap
+    else
+      rows.groupByKey(r => (r.shard, r.term))
+        .flatMapGroups((key, it) => hit(key, it.toSeq).iterator)
+        .collect().toMap
   }
 }

@@ -157,10 +157,7 @@ object SearchOps {
   def qPhraseSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.booleanTopK(PhraseQuery, 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
       .orderBy(desc("score"), asc("path"))
   }
 
@@ -209,10 +206,7 @@ object SearchOps {
   def qPrefixSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.topK(PrefixSearchQuery, 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
   }
 
   /** Dynamic-term BM25 in pure SQL: the expansion is data-dependent, so
@@ -360,10 +354,7 @@ object SearchOps {
   def qNegSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.booleanTopK(NegQuery, 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
       .orderBy(desc("score"), asc("path"))
   }
 
@@ -437,10 +428,7 @@ object SearchOps {
   def qFuzzySearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.topK(FuzzyQuery, 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
   }
 
   def fuzzySearchOracleSql: String = {
@@ -550,10 +538,7 @@ object SearchOps {
     val eng = docEngine(spark, dir)
     val hits = eng.topKFiltered(FilteredQuery, 10 + TieMargin,
       FilteredPredicate)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
       .orderBy(desc("score"), asc("path"))
   }
 
@@ -586,10 +571,7 @@ object SearchOps {
   def qBoostedSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.topK(BoostedQuery, 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
   }
 
   /** Per-term boosted BM25 contribution — the boost multiplies the idf
@@ -626,10 +608,7 @@ object SearchOps {
     require(page1.size == 10, s"page 1 must be full, got ${page1.size}")
     val cur = page1.last
     val hits = eng.topKAfter(q, 10 + TieMargin, cur.score, cur.docId)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
   }
 
   def searchAfterOracleSql: String = {
@@ -657,10 +636,7 @@ object SearchOps {
   def qMinMatchSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.topKMin(QueryTerms.mkString(" "), 10 + TieMargin, MinMatchN)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
       .orderBy(desc("score"), asc("path"))
   }
 
@@ -692,10 +668,7 @@ object SearchOps {
   def qNearSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.booleanTopK(NearQuery, 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
       .orderBy(desc("score"), asc("path"))
   }
 
@@ -763,10 +736,7 @@ object SearchOps {
   def qFieldSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.topKQS(QSFieldQuery, 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
       .orderBy(desc("score"), asc("path"))
   }
 
@@ -833,10 +803,7 @@ object SearchOps {
     val cur = page1.last
     val hits = eng.topKQSAfter(QSFieldQuery, 10 + TieMargin,
       cur.score, cur.docId)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
       .orderBy(desc("score"), asc("path"))
   }
 
@@ -876,10 +843,7 @@ object SearchOps {
   def qNear3Search(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.booleanTopK(Near3Query, 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
       .orderBy(desc("score"), asc("path"))
   }
 
@@ -1003,25 +967,26 @@ object SearchOps {
     * ambiguous). */
   val TieMargin = 20
 
-  /** (docId, score_raw, path, table_id) rows for a hit list; table_id
-    * is docmeta's explicit tableId column (build-time extracted). */
-  private def withTableId(spark: SparkSession, eng: QueryEngine,
+  /** The oracle-comparable top 10 of an over-fetched hit list as
+    * (path, score rounded to 4 places): boundary ties are re-broken by
+    * docmeta's explicit tableId column (build-time extracted). */
+  private def oracleTop10(spark: SparkSession, eng: QueryEngine,
                           hits: Seq[graft.index.ScoredDoc]): DataFrame = {
     import spark.implicits._
     eng.docmeta.where(col("docId").isin(hits.map(_.docId): _*))
       .select(col("docId"), col("path"), col("tableId").as("table_id"))
       .join(broadcast(hits.map(h => (h.docId, h.score)).toDF("docId", "score_raw")),
         Seq("docId"))
+      .orderBy(desc("score_raw"), asc("table_id"))
+      .limit(10)
+      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
   }
 
   /** Real segmented-index BM25 search (disjunctive). */
   def qEngineSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.topK(QueryTerms.mkString(" "), 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
   }
 
   /** Boolean keyword query through the engine ("spaces are ANDs commas
@@ -1029,10 +994,7 @@ object SearchOps {
   def qEngineBool(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
     val hits = eng.booleanTopK(BoolQuery, 10 + TieMargin)
-    withTableId(spark, eng, hits)
-      .orderBy(desc("score_raw"), asc("table_id"))
-      .limit(10)
-      .select(col("path"), Tables.rd(col("score_raw"), 4).as("score"))
+    oracleTop10(spark, eng, hits)
       .orderBy(desc("score"), asc("path"))
   }
 
@@ -1054,16 +1016,15 @@ object SearchOps {
   /** Resolve the engine behind a MatchRegistry index reference: the
     * documents convention ensure-builds/reopens; an explicit index root
     * is OPEN-only (the caller built it — a query must not kick off a
-    * surprise build against an empty root, it fails loudly instead). */
+    * surprise build against an empty root, it fails loudly instead) and
+    * shares match_topk's snapshot-version-keyed cache, so later commits
+    * to the root are seen. */
   def engineFor(spark: SparkSession,
                 index: graft.plans.MatchRegistry.IndexRef): QueryEngine =
     index match {
       case graft.plans.MatchRegistry.DocsTable(dir) => docEngine(spark, dir)
-      case graft.plans.MatchRegistry.IndexRoot(root) => synchronized {
-        evictDeadSessions(engineCache, spark)
-        engineCache.getOrElseUpdate(sessionCacheKey(spark, s"root:$root"),
-          new QueryEngine(spark, root))
-      }
+      case graft.plans.MatchRegistry.IndexRoot(root) =>
+        graft.plans.MatchTopKExec.engineFor(spark, root)
     }
 
   /** The docmeta join-key columns of every document matching a boolean

@@ -23,7 +23,11 @@ case class MatchTopK(indexRoot: String, query: String, k: Int,
                      boolMode: Boolean,
                      filter: Option[String] = None,
                      override val output: Seq[Attribute] = MatchTopK.freshOutput())
-    extends LeafNode
+    extends LeafNode {
+  require(filter.isEmpty || !boolMode,
+    "match_topk: filter composes with the SCORED path (boolMode=false); " +
+      "boolean queries compose filters through WHERE match(...) instead")
+}
 
 object MatchTopK {
   /** Output carried as a constructor field so tree copies keep the same
@@ -47,26 +51,13 @@ case class MatchTopKExec(plan: MatchTopK) extends LeafExecNode {
     // Coordinator phase runs driver-side (it launches its own Spark jobs,
     // like a broadcast-exchange build); the k result rows come back as a
     // one-partition RDD.
-    val spark = SparkSession.active
-    val eng = MatchTopKExec.engineFor(spark, plan.indexRoot)
-    // the scored paths honor the r7 field/range syntax: field atoms in
-    // the query string compile to a docmeta gate (ANDed with an explicit
-    // filter argument when both are present); boolMode's parseGroups
-    // handles fields natively per OR-group
-    val (residual, qsFields) =
-      if (plan.boolMode) (plan.query, Nil)
-      else graft.index.QueryParser.splitFieldFilters(plan.query)
-    val qsPred: Option[String] =
-      if (qsFields.isEmpty) None
-      else Some(graft.index.QueryParser.compileFields(qsFields))
-    val hits = (plan.filter, qsPred) match {
-      case (Some(pred), Some(qp)) =>
-        eng.topKFiltered(residual, plan.k, s"($pred) AND $qp")
-      case (Some(pred), None) => eng.topKFiltered(residual, plan.k, pred)
-      case (None, _) if plan.boolMode => eng.booleanTopK(plan.query, plan.k)
-      case (None, Some(qp)) => eng.topKFiltered(residual, plan.k, qp)
-      case (None, None) => eng.topK(residual, plan.k)
-    }
+    val eng = MatchTopKExec.engineFor(SparkSession.active, plan.indexRoot)
+    // the scored mode is topKQS's path (field atoms gate, ANDed after the
+    // explicit filter; a field-only query rejects loudly); boolMode's
+    // parseGroups handles fields natively per OR-group
+    val hits =
+      if (plan.boolMode) eng.booleanTopK(plan.query, plan.k)
+      else eng.scoredQS(plan.query, plan.k, plan.filter, None)
     val rows: Seq[InternalRow] =
       if (hits.isEmpty) Nil
       else {
@@ -84,11 +75,7 @@ case class MatchTopKExec(plan: MatchTopK) extends LeafExecNode {
             UTF8String.fromString(m.getString(5)))
         }
       }
-    sparkContext.parallelize(rows, 1).mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(MatchTopK.schema)
-      it.map(r => proj(r).copy())
-    }
+    LocalRows(sparkContext, rows, MatchTopK.schema)
   }
 }
 
@@ -114,6 +101,18 @@ object MatchTopKExec {
         eng
     }
   }
+}
+
+/** Driver-computed rows of a leaf exec node as its one-partition output
+  * RDD, projected to unsafe rows like every physical operator's output. */
+private[plans] object LocalRows {
+  def apply(sc: org.apache.spark.SparkContext, rows: Seq[InternalRow],
+            schema: StructType): RDD[InternalRow] =
+    sc.parallelize(rows, 1).mapPartitions { it =>
+      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+        .create(schema)
+      it.map(r => proj(r).copy())
+    }
 }
 
 object MatchStrategy extends SparkStrategy {
@@ -153,11 +152,7 @@ case class HighlightExec(plan: Highlight) extends LeafExecNode {
       eng.highlight(plan.query, plan.docId).flatMap { h =>
         h.positions.map(p => InternalRow(UTF8String.fromString(h.term), p))
       }
-    sparkContext.parallelize(rows, 1).mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(Highlight.schema)
-      it.map(r => proj(r).copy())
-    }
+    LocalRows(sparkContext, rows, Highlight.schema)
   }
 }
 
@@ -190,11 +185,7 @@ case class ExplainScoreExec(plan: ExplainScore) extends LeafExecNode {
         InternalRow(UTF8String.fromString(e.term), e.df, e.idf, e.tf, e.dl,
           e.contribution)
       }
-    sparkContext.parallelize(rows, 1).mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(ExplainScore.schema)
-      it.map(r => proj(r).copy())
-    }
+    LocalRows(sparkContext, rows, ExplainScore.schema)
   }
 }
 
@@ -240,16 +231,12 @@ object MatchTvf {
     require(args.size >= 3 && args.size <= 5,
       "match_topk(indexRoot, query, k[, boolMode[, filter]]) takes 3 to 5 arguments")
     val boolMode = args.lift(3).exists(boolArg)
-    val filter = args.lift(4).map(strArg(_, "filter")).filter(_.nonEmpty)
-    require(filter.isEmpty || !boolMode,
-      "match_topk: filter composes with the SCORED path (boolMode=false); " +
-        "boolean queries compose filters through WHERE match(...) instead")
     MatchTopK(
       indexRoot = strArg(args(0), "indexRoot"),
       query = strArg(args(1), "query"),
       k = intArg(args(2), "k"),
       boolMode = boolMode,
-      filter = filter)
+      filter = args.lift(4).map(strArg(_, "filter")).filter(_.nonEmpty))
   }
 
   private def longArg(e: Expression, what: String): Long = e match {

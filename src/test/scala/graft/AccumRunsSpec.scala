@@ -118,4 +118,15 @@ class AccumRunsSpec extends AnyFunSuite with SparkSessionFixture {
       assert(postings(s"$work/default", c.manifest.segments.head.name) == pa)
     } finally IndexBuilder.AccumMaxPostings = saved
   }
+
+  test("the postings-path observation reads loudly: missing fails, empty pass is 0") {
+    assert(IndexBuilder.observedLong(Map("tokens" -> 7L), "tokens", "seg") === 7L)
+    assert(IndexBuilder.observedLong(Map("maxDl" -> Integer.valueOf(3)),
+      "maxDl", "seg") === 3L)
+    assert(IndexBuilder.observedLong(Map("tokens" -> null), "tokens", "seg") === 0L)
+    intercept[IllegalStateException] {
+      IndexBuilder.observedLong(Map.empty, "tokens", "seg") }
+    intercept[IllegalStateException] {
+      IndexBuilder.observedLong(Map("tokens" -> "7"), "tokens", "seg") }
+  }
 }

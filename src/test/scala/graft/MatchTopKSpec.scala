@@ -585,4 +585,45 @@ class MatchTopKSpec extends AnyFunSuite with SparkSessionFixture {
       .collect().head.getInt(0)
     assert(sig === 64)
   }
+
+  test("match_topk with a field-only query rejects loudly, like topKQS") {
+    val viaOp = intercept[IllegalArgumentException] {
+      GraftSql.search(spark, root, "lang:scala", 5).collect()
+    }
+    val direct = intercept[IllegalArgumentException] {
+      new QueryEngine(spark, root).topKQS("lang:scala", 5)
+    }
+    assert(viaOp.getMessage === direct.getMessage)
+  }
+
+  test("WHERE match() over a registered index root sees later commits") {
+    import graft.plans.MatchRegistry
+    import spark.implicits._
+    val work = Files.createTempDirectory(
+      Paths.get("target").toAbsolutePath, "matchappend").toString
+    val tablePath = s"$work/corpus.parquet"
+    val base = (0 until 200).map(i => CorpusGen.doc(5L, i))
+    val fresh = CorpusGen.doc(5L, 200).copy(content = "zqfreshterm only here")
+    (base :+ fresh).toDS().write.parquet(tablePath)
+    val idxRoot = s"$work/index"
+    IndexBuilder.build(spark, base.toDS(), idxRoot, 4)
+    MatchRegistry.register(tablePath, "content",
+      Seq("repo" -> "repo", "path" -> "path", "commit" -> "commit"),
+      MatchRegistry.IndexRoot(idxRoot))
+    try {
+      GraftSql.ensureMatchSupport(spark)
+      spark.read.parquet(tablePath).createOrReplaceTempView("appendcorpus")
+      def hits(): Seq[String] = {
+        val df = spark.sql(
+          "SELECT path FROM appendcorpus WHERE match(content, 'zqfreshterm')")
+        // the index answers, not the row-level fallback
+        assert(df.queryExecution.optimizedPlan
+          .exists(_.isInstanceOf[graft.plans.MatchIds]))
+        df.collect().map(_.getString(0)).toSeq
+      }
+      assert(hits() === Nil)
+      IndexBuilder.build(spark, Seq(fresh).toDS(), idxRoot, 4, batch = 1)
+      assert(hits() === Seq(fresh.path))
+    } finally MatchRegistry.unregister(tablePath)
+  }
 }

@@ -60,7 +60,7 @@ class QueryPathParitySpec extends AnyFunSuite with SparkSessionFixture {
   private lazy val root: String = {
     import spark.implicits._
     val r = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "pathparity").toString + "/index"
+      Paths.get("target").toAbsolutePath, "pathparity").toString + "/index"
     val idOf = Some((d: CorpusDoc) =>
       d.path.replaceAll(""".*file_([0-9]+)\..*""", "$1").toLong)
     Seq((0, 0 until 600), (1, 600 until nDocs)).foreach { case (batch, ids) =>
